@@ -242,44 +242,58 @@ object GraphAlgorithms {
    * defaults alpha=0.85, 10 iterations —
    * `src/frontend/JasmineGraphFrontEndProtocol.h:112-113`,
    * `JasmineGraphInstanceService.cpp:1650-1816`), which also does not
-   * redistribute dangling mass. Returns (id, rank).
+   * redistribute dangling mass. Returns (id, rank), one row per node.
    *
-   * The per-iteration plan is one shuffle (groupBy dst); out-degrees are
-   * computed once and joined in. Each iteration is persisted and the
-   * previous one unpersisted so the lineage stays O(1) deep.
+   * Out-degree counts every oriented edge leaving u — self-loops,
+   * multi-edges, null `dst` and `dst` outside `nodes` included — while
+   * only nodes receive and send rank. The [[rankKernel]] case with
+   * restart 1.0 on every vertex; the result is a lazy plan, consume it
+   * once or checkpoint it before reading it twice.
    */
-  /**
-   * The iterations COMPOSE into one lazy plan — Catalyst optimizes and
-   * executes the whole chain in a single job with exchange reuse, which
-   * measured ~10x faster than materializing each iteration. Lineage is
-   * truncated every `checkpointInterval` iterations so deep runs don't
-   * accumulate unbounded plans (at cluster scale the truncation target
-   * would be a parquet/Delta table; locally localCheckpoint suffices).
-   * The degree-annotated edge list is persisted — it is scanned once per
-   * iteration.
-   */
-  def pageRank(g: PropertyGraph, alpha: Double = 0.85, iterations: Int = 10,
-               checkpointInterval: Int = 6): DataFrame = {
-    val edges = g.orientedEdges.select(col("src"), col("dst"))
-    val outDeg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val withDeg = edges.join(outDeg, "src")
-      .select(col("src"), col("dst"), col("outdeg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+  def pageRank(g: PropertyGraph, alpha: Double = 0.85, iterations: Int = 10): DataFrame =
+    rankKernel(g, g.nodes.select(col("id"), lit(1.0).as("restart")), alpha, iterations)
 
-    var ranks = g.nodes.select(col("id"), lit(1.0).as("rank"))
+  /** Iterations between lineage truncations of a rank chain: a run up to
+    * this long stays one lazy plan; a longer one is checkpointed so the
+    * plan Spark re-analyzes for each job never grows past it. */
+  private val RankPlanDepth = 6
+
+  /**
+   * The power iteration behind [[pageRank]] and [[personalizedPageRank]]:
+   * r_{t+1}(v) = (1−α)·restart(v) + α·Σ_{u→v} r_t(u)/outdeg(u), from
+   * r_0 = restart, over `restart`'s (id, restart) rows.
+   *
+   * The vertex frame (id, restart, out-neighbour list, outdeg) is built
+   * once and localCheckpointed; nothing is persisted. Each iteration
+   * explodes rank/outdeg shares from the vertex rows, aggregates them by
+   * dst (its one new exchange) and hash-joins the sums back onto the
+   * frame. The checkpoint's id layout is not visible to the planner, so
+   * the frame is shuffled by id once per query and every iteration's
+   * join reads that same reused exchange; the shuffle-hash hint keeps
+   * the join from broadcasting or sorting either side.
+   */
+  private def rankKernel(g: PropertyGraph, restart: DataFrame, alpha: Double,
+                         iterations: Int): DataFrame = {
+    // collect_list drops null dst; outdeg still counts those edges
+    val adj = g.orientedEdges
+      .groupBy(col("src").as("id"))
+      .agg(collect_list(col("dst")).as("dsts"), count(lit(1)).as("outdeg"))
+    val verts = restart.join(adj, Seq("id"), "left")
+      .select(col("id"), col("restart"), col("dsts"), col("outdeg"))
+      .localCheckpoint(true)
+    var ranks = verts.withColumn("rank", col("restart"))
     for (i <- 1 to iterations) {
-      val contribs = withDeg
-        .join(ranks, withDeg("src") === ranks("id"))
-        .select(col("dst"), (col("rank") / col("outdeg")).as("c"))
+      val sums = ranks
+        .select(explode(col("dsts")).as("dst"), (col("rank") / col("outdeg")).as("c"))
         .groupBy("dst").agg(sum(col("c")).as("contrib"))
-      ranks = g.nodes.select(col("id"))
-        .join(contribs, col("id") === col("dst"), "left")
-        .select(col("id"),
-          (lit(1.0 - alpha) + lit(alpha) * coalesce(col("contrib"), lit(0.0))).as("rank"))
-      if (i % checkpointInterval == 0 && i < iterations)
+      ranks = verts.join(sums.hint("shuffle_hash"), col("id") === col("dst"), "left")
+        .select(verts.columns.map(col).toSeq :+
+          (lit(1.0 - alpha) * col("restart") +
+            lit(alpha) * coalesce(col("contrib"), lit(0.0))).as("rank"): _*)
+      if (i % RankPlanDepth == 0 && i < iterations)
         ranks = ranks.localCheckpoint(true)
     }
-    ranks
+    ranks.select(col("id"), col("rank"))
   }
 
   /**
@@ -303,10 +317,10 @@ object GraphAlgorithms {
    * `(id, rank_micro BIGINT, rank DOUBLE)`, the double being the exact
    * micro/1e6.
    *
-   * Same shape as [[pageRank]]: the weighted edge list joins its
-   * out-weight total once and persists; each iteration is one
-   * rank-keyed join + one destination aggregate; ranks localCheckpoint
-   * every `checkpointInterval` iterations to keep the plan flat.
+   * Shape: the weighted edge list joins its out-weight total once and
+   * persists; each iteration is one rank-keyed join + one destination
+   * aggregate; ranks localCheckpoint every `checkpointInterval`
+   * iterations to keep the plan flat.
    */
   def weightedPageRank(edges: DataFrame, alphaNum: Int = 85,
                        alphaDen: Int = 100, iterations: Int = 10,
@@ -3065,7 +3079,7 @@ object GraphAlgorithms {
    * keeps the worst case far from Long overflow.
    *
    * Shape: two (join + aggregate) passes over the persisted edge list per
-   * iteration — the [[pageRank]] posture, survives the same scale-up.
+   * iteration.
    * Adaptive (the [[closenessCentrality]]/[[kCore]] pattern): ≤
    * `localThreshold` distinct edges run the recurrence driver-side over
    * index arrays — each distributed iteration costs several fixed-latency
@@ -3075,8 +3089,9 @@ object GraphAlgorithms {
    * LAZY contract (like [[pageRank]]): the distributed regime returns an
    * unmaterialized plan — consume it once, or `localCheckpoint`/`persist`
    * first when reading it multiple times, else each action recomputes
-   * the full 2k-join recurrence. The internal edge persist's lifetime is
-   * GC/ContextCleaner-managed.
+   * the full 2k-join recurrence. The internal edge persist stays in the
+   * session's CacheManager until someone unpersists it: it is not
+   * released when the frame becomes unreachable.
    */
   def hits(edges: DataFrame, iterations: Int = 3,
            localThreshold: Long = 10000000L): DataFrame = {
@@ -3109,12 +3124,12 @@ object GraphAlgorithms {
     var hub = ids.select(col("id"), lit(1L).as("hub"))
     var auth: DataFrame = null
     // iterations ≤ 6, so the whole recurrence COMPOSES into one lazy
-    // plan over the persisted edge list — exactly the [[pageRank]]
-    // posture (lazy return, identical per-iteration subtrees for
-    // Catalyst's exchange reuse, ContextCleaner reclaims the persist
-    // when the frame becomes unreachable). Eager per-step
-    // localCheckpoints here measured 36× wall for 10× data at sf1
-    // (12 materializations of a 13.5M-edge frame).
+    // plan over the persisted edge list (lazy return, identical
+    // per-iteration subtrees for Catalyst's exchange reuse). The persist
+    // stays in the session's CacheManager after the call: nothing
+    // unpersists it. Eager per-step localCheckpoints here measured 36×
+    // wall for 10× data at sf1 (12 materializations of a 13.5M-edge
+    // frame).
     // shuffle_hash on the vertex-sized build sides: the edge exchanges
     // are already shared across iterations (ReusedExchange — identical
     // subtrees), but SortMergeJoin re-SORTS the edge list on every read
@@ -3171,47 +3186,20 @@ object GraphAlgorithms {
 
   /**
    * Personalized PageRank: [[pageRank]] with the uniform teleport replaced
-   * by a restart onto `sources` — r_{t+1}(v) = (1−α)·[v ∈ S] + α·Σ
-   * contribs. The standard random-walk-with-restart relevance score used
-   * for recommendation seeds; same one-lazy-plan-per-iteration posture and
-   * persisted degree-annotated edge list as [[pageRank]] — the iterations
-   * COMPOSE into one lazy plan Catalyst executes as a single job with
-   * exchange reuse (an eager per-call materialization measured ~4× slower
-   * here, matching pageRank's observed 10×).
+   * by a restart onto `sources` (its first column; duplicates, nulls and
+   * ids outside `nodes` add nothing) — r_{t+1}(v) = (1−α)·[v ∈ S] + α·Σ
+   * contribs, from r_0 = [v ∈ S]. The standard random-walk-with-restart
+   * relevance score used for recommendation seeds; the same
+   * [[rankKernel]] and lazy-plan contract as [[pageRank]].
    */
   def personalizedPageRank(g: PropertyGraph, sources: DataFrame,
-                           alpha: Double = 0.85, iterations: Int = 5,
-                           checkpointInterval: Int = 6): DataFrame = {
-    val edges = g.orientedEdges.select(col("src"), col("dst"))
-    val outDeg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val withDeg = edges.join(outDeg, "src")
-      .select(col("src"), col("dst"), col("outdeg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val restart = g.nodes.select(col("id"))
-      .join(sources.select(col(sources.columns.head).as("id")).distinct(),
-        Seq("id"), "left_semi")
+                           alpha: Double = 0.85, iterations: Int = 5): DataFrame = {
+    val seeds = sources.select(col(sources.columns.head).as("id")).distinct()
       .select(col("id"), lit(1.0).as("r"))
-    // the restart indicator is consumed every iteration — one tiny eager
-    // materialization beats re-running the semi-join per reference
-    val base = g.nodes.select(col("id"))
-      .join(restart.select(col("id"), col("r")), Seq("id"), "left")
+    val restart = g.nodes.select(col("id"))
+      .join(seeds, Seq("id"), "left")
       .select(col("id"), coalesce(col("r"), lit(0.0)).as("restart"))
-      .localCheckpoint(true)
-    var ranks = base.select(col("id"), col("restart").as("rank"))
-    for (i <- 1 to iterations) {
-      val contribs = withDeg
-        .join(ranks, withDeg("src") === ranks("id"))
-        .select(col("dst"), (col("rank") / col("outdeg")).as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("contrib"))
-      ranks = base
-        .join(contribs, col("id") === col("dst"), "left")
-        .select(col("id"),
-          (lit(1.0 - alpha) * col("restart") +
-            lit(alpha) * coalesce(col("contrib"), lit(0.0))).as("rank"))
-      if (i % checkpointInterval == 0 && i < iterations)
-        ranks = ranks.localCheckpoint(true)
-    }
-    ranks
+    rankKernel(g, restart, alpha, iterations)
   }
 
   /** Support (triangle membership count) per canonical edge: triangles
@@ -3569,8 +3557,9 @@ object GraphAlgorithms {
     // canonicalDirections(srcPartitioned) establishes, so the src half
     // of the degree aggregation and the Σxy src join run exchange-free
     // (a checkpoint's LogicalRDD would erase it — r17 sf10 A/B: the
-    // whole query 316 → measured below with this layout). Lifetime is
-    // GC/ContextCleaner-managed, the hits/pageRank persist posture.
+    // whole query 316 → measured below with this layout). The persist
+    // stays in the session's CacheManager after the call; nothing
+    // unpersists it.
     val canon = canonicalDirections(edges, srcPartitioned = true)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val recip = reciprocityAgg(canon)
@@ -3618,7 +3607,8 @@ object GraphAlgorithms {
     // profile 97.7 → 12.6 s. On an unpartitioned cn the two halves
     // shuffle the same total volume the union did. persist, not
     // checkpoint, keeps deg's id-partitioning visible for the Σxy join;
-    // lifetime is GC/ContextCleaner-managed (the hits/pageRank posture).
+    // it stays in the session's CacheManager after the call (nothing
+    // unpersists it).
     val deg = cn.groupBy(col("src").as("id")).agg(count(lit(1)).as("__ds"))
       .join(cn.groupBy(col("dst").as("id")).agg(count(lit(1)).as("__dd")),
         Seq("id"), "full_outer")
@@ -4862,7 +4852,8 @@ object GraphAlgorithms {
     // subtree ends below a non-matching exchange and the whole
     // edge-sized join+agg would re-run per consumer — measured 465 s
     // vs ~half after this persist at a 110M-canonical-edge sf10 probe).
-    // Lazy persist, ContextCleaner reclaims when the frame is GC'd.
+    // Lazy persist; it stays in the session's CacheManager after the
+    // call, since nothing unpersists it.
     iterates.dropRight(1).foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
     iterates.zipWithIndex.map { case (e, i) =>
       val t = i + 1

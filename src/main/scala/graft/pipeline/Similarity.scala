@@ -644,7 +644,8 @@ object Similarity {
    * hop, so the per-hop plan is O(1) regardless of hop count. Without the
    * checkpoint, `beam` appears twice in each iteration (union + frontier),
    * embedding ~2^h copies of the seed scan at hop h — exponential plan
-   * growth, the same pathology pageRank's checkpointInterval prevents.
+   * growth, the pathology the fixed plan-depth checkpoint of the rank
+   * kernel (`GraphAlgorithms.pageRank`) prevents.
    * At cluster scale the checkpoint target would be a parquet/Delta table;
    * the beam itself is beamWidth rows, trivially materializable.
    */

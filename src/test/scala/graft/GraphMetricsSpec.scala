@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.algorithms.GraphAlgorithms
+import graft.model.PropertyGraph
 
 /**
  * Structural graph metrics: eccentricity, reciprocity, degree
@@ -733,5 +734,91 @@ class GraphMetricsSpec extends SparkSpec {
     assert(rows.map(_._1).toSeq === Seq("a", "b", "lone"))
     // the isolated vertex's iterate is the zero neighbor sum
     assert(rows.find(_._1 == "lone").get === (("lone", 0L, 0L)))
+  }
+
+  /** A property graph over string ids; null endpoints are kept. */
+  private def rankGraph(nodes: Seq[String], edges: Seq[(String, String)],
+                        directed: Boolean): PropertyGraph = {
+    val raw = edges.toDF("src", "dst")
+      .select(col("src"), col("dst"), lit("E").as("type"),
+        map().cast("map<string,string>").as("properties"))
+    PropertyGraph(nodes.toDF("id"), PropertyGraph.withEid(raw), isDirected = directed)
+  }
+
+  /** Brute-force power iteration, the rank contract written out edge by
+    * edge: every oriented edge with a non-null src counts toward that
+    * src's out-degree (self-loops, multi-edges, null or absent dst
+    * included), and only edges between two nodes carry rank. */
+  private def powerIteration(nodes: Seq[String], edges: Seq[(String, String)],
+      directed: Boolean, restart: String => Double, alpha: Double,
+      iterations: Int): Map[String, Double] = {
+    val oriented = if (directed) edges else edges ++ edges.map(_.swap)
+    val outdeg = oriented.filter(_._1 != null).groupBy(_._1).map { case (u, es) => u -> es.size }
+    val isNode = nodes.toSet
+    var r = nodes.map(v => v -> restart(v)).toMap
+    for (_ <- 1 to iterations) {
+      val in = collection.mutable.Map.empty[String, Double].withDefaultValue(0.0)
+      for ((u, v) <- oriented if isNode(u) && isNode(v)) in(v) += r(u) / outdeg(u)
+      r = nodes.map(v => v -> ((1 - alpha) * restart(v) + alpha * in(v))).toMap
+    }
+    r
+  }
+
+  private def assertRanks(got: DataFrame, want: Map[String, Double], what: String): Unit = {
+    val rows = got.collect().map(r => r.getString(0) -> r.getDouble(1))
+    assert(rows.length === want.size, s"$what: one row per node")
+    assert(rows.toMap.keySet === want.keySet, what)
+    rows.foreach { case (id, r) =>
+      assert(math.abs(r - want(id)) <= 1e-12, s"$what: node $id got $r, want ${want(id)}")
+    }
+  }
+
+  // a–f are nodes; x and y are not. Multi-edge a→b, self-loop b→b,
+  // c→x leaves the node set, y→a enters it, d→null and null→e have a
+  // null endpoint, f and sink have no out-edge.
+  private val hostileNodes = Seq("a", "b", "c", "d", "e", "f", "sink")
+  private val hostileEdges = Seq(("a", "b"), ("a", "b"), ("b", "b"), ("b", "c"),
+    ("c", "a"), ("c", "x"), ("y", "a"), ("d", null), (null, "e"), ("e", "a"),
+    ("e", "sink"), ("d", "sink"))
+
+  private val rankCases = Seq(
+    ("directed", hostileNodes, hostileEdges, true),
+    ("undirected", hostileNodes, hostileEdges, false),
+    ("no edges", hostileNodes, Seq.empty[(String, String)], true),
+    ("empty graph", Seq.empty[String], Seq.empty[(String, String)], false))
+
+  test("pageRank: hostile inputs match a brute-force power iteration") {
+    for ((name, nodes, edges, directed) <- rankCases; iters <- Seq(0, 1, 30)) {
+      val g = rankGraph(nodes, edges, directed)
+      assertRanks(GraphAlgorithms.pageRank(g, alpha = 0.85, iterations = iters),
+        powerIteration(nodes, edges, directed, _ => 1.0, 0.85, iters),
+        s"pageRank $name, $iters iterations")
+    }
+  }
+
+  test("personalizedPageRank: hostile inputs and sources match a brute-force power iteration") {
+    val sourceSets = Seq(
+      "absent" -> Seq("zz"),
+      "duplicated with null" -> Seq("a", "a", "sink", null),
+      "empty" -> Seq.empty[String])
+    for ((name, nodes, edges, directed) <- rankCases; (what, srcs) <- sourceSets;
+         iters <- Seq(0, 1, 30)) {
+      val g = rankGraph(nodes, edges, directed)
+      val restart = (v: String) => if (srcs.contains(v)) 1.0 else 0.0
+      assertRanks(
+        GraphAlgorithms.personalizedPageRank(g, srcs.toDF("id"), alpha = 0.7, iterations = iters),
+        powerIteration(nodes, edges, directed, restart, 0.7, iters),
+        s"personalizedPageRank $name, $what sources, $iters iterations")
+    }
+  }
+
+  test("pageRank/personalizedPageRank: the call leaves no cache entry behind") {
+    val cache = spark.sharedState.cacheManager
+    cache.clearCache()
+    val g = rankGraph(hostileNodes, hostileEdges, directed = true)
+    GraphAlgorithms.pageRank(g, iterations = 3).collect()
+    assert(cache.isEmpty, "pageRank left a cached frame")
+    GraphAlgorithms.personalizedPageRank(g, Seq("a").toDF("id"), iterations = 3).collect()
+    assert(cache.isEmpty, "personalizedPageRank left a cached frame")
   }
 }

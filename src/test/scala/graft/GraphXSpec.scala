@@ -25,6 +25,36 @@ class GraphXSpec extends SparkSpec {
     df.foreach { case (id, r) => assert(math.abs(r - gx(id)) < 1e-6, s"node $id: $r vs ${gx(id)}") }
   }
 
+  test("GraphX static PageRank: equal without sinks, rescaled to sum n with them") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.model.PropertyGraph
+    def graph(edges: Seq[(String, String)]): PropertyGraph = {
+      val raw = edges.toDF("src", "dst")
+        .select(col("src"), col("dst"), lit("E").as("type"),
+          map().cast("map<string,string>").as("properties"))
+      PropertyGraph(Seq("a", "b", "c", "d").toDF("id"), PropertyGraph.withEid(raw),
+        isDirected = true)
+    }
+    def ranks(df: org.apache.spark.sql.DataFrame): Map[String, Double] =
+      df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    // every vertex has an out-edge, self-loops and multi-edges included
+    val sinkFree = graph(Seq(("a", "b"), ("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "d")))
+    val df = ranks(GraphAlgorithms.pageRank(sinkFree, alpha = 0.85, iterations = 4))
+    val gx = ranks(GraphXAlgorithms.pageRank(sinkFree, alpha = 0.85, iterations = 4))
+    df.foreach { case (id, r) => assert(math.abs(r - gx(id)) < 1e-9, s"node $id: $r vs ${gx(id)}") }
+    // d is a sink: the DataFrame loop loses its mass, GraphX rescales the
+    // final ranks so that they sum to the vertex count
+    val withSink = graph(Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")))
+    val dfs = ranks(GraphAlgorithms.pageRank(withSink, alpha = 0.85, iterations = 4))
+    val gxs = ranks(GraphXAlgorithms.pageRank(withSink, alpha = 0.85, iterations = 4))
+    assert(dfs.values.sum < 4.0 - 1e-3)
+    val scale = 4.0 / dfs.values.sum
+    dfs.foreach { case (id, r) =>
+      assert(math.abs(r * scale - gxs(id)) < 1e-9, s"node $id: $r x $scale vs ${gxs(id)}")
+    }
+  }
+
   test("connected components find the powergrid's single component") {
     val cc = GraphXAlgorithms.connectedComponents(pg)
     assert(cc.select("component").distinct().count() === 1L)
